@@ -3,8 +3,8 @@ package graft.vintage
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.MessageTypeParser
 
@@ -80,8 +80,7 @@ private[vintage] object CheckpointCodec {
     * reading any row.
     */
   def recordCount(src: Path, conf: Configuration): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(src, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = ParquetStats.openFile(src, conf)
     try r.getRecordCount finally r.close()
   }
 
@@ -92,10 +91,7 @@ private[vintage] object CheckpointCodec {
     * row walk but no driver allocation.
     */
   def readMeta(src: Path, conf: Configuration): Seq[Action] = {
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), src)
-      .withConf(conf)
-      .build()
+    val reader = ParquetStats.groupReader(src, conf)
     val out = scala.collection.mutable.ArrayBuffer[Action]()
     try {
       var g = reader.read()
@@ -167,10 +163,7 @@ private[vintage] object CheckpointCodec {
         rowsInPart += 1
       }
       prevs.foreach { prev =>
-        val reader = ParquetReader
-          .builder(new GroupReadSupport(), prev)
-          .withConf(conf)
-          .build()
+        val reader = ParquetStats.groupReader(prev, conf)
         try {
           var g = reader.read()
           while (g != null) {
@@ -196,10 +189,7 @@ private[vintage] object CheckpointCodec {
   }
 
   def read(src: Path, conf: Configuration): Seq[Action] = {
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), src)
-      .withConf(conf)
-      .build()
+    val reader = ParquetStats.groupReader(src, conf)
     val out = scala.collection.mutable.ArrayBuffer[Action]()
     try {
       var g = reader.read()

@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   * ANTI-JOIN of the scan against the (file, position) set from the
   * log. The join is a plan-level wrapper: the vectorized parquet
   * reader, pushed filters, and column pruning underneath are untouched.
+  * SQL-catalog reads skip the join: the native scan
+  * (`connector.VintageNativeScan`) reads the same row index and drops
+  * each file's [[DeletedRows]] as rows leave the parquet reader.
   *
   * DV storage is three-tier per file, graded by cardinality:
   *   - INLINE (<= `maxInline` positions AND within the commit-wide
@@ -265,6 +268,51 @@ object DeletionVectors {
     rel
   }
 
+  /** Read the deleted rows of ONE data file (canonical key `fileKey`)
+    * from the sidecar directory `dir`, in the calling task — the
+    * in-scan counterpart of [[dvLookup]]'s distributed sidecar scan.
+    * Only rows naming `fileKey` apply (a sidecar holds the vectors of
+    * every file its commit marked), and both formats
+    * read: run-length `(pos_start, pos_end)` and the legacy single
+    * `pos`. The file-key predicate is pushed into the parquet reader,
+    * so row groups of other files are skipped (sidecar rows are
+    * clustered by file).
+    */
+  private[vintage] def readSidecar(dir: String, fileKey: String,
+      conf: org.apache.hadoop.conf.Configuration): DeletedRows = {
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.io.api.Binary
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val parts = root.getFileSystem(conf).listStatus(root).iterator
+      .map(_.getPath).filter { p =>
+        val n = p.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
+    val onlyFile = FilterCompat.get(FilterApi.eq(
+      FilterApi.binaryColumn("file_key"), Binary.fromString(fileKey)))
+    val starts = Array.newBuilder[Long]
+    val ends = Array.newBuilder[Long]
+    parts.foreach { part =>
+      val reader = ParquetStats.groupReader(part, conf, onlyFile)
+      try {
+        var g = reader.read()
+        while (g != null) {
+          // the pushed predicate may only prune row groups: re-check
+          if (g.getString("file_key", 0) == fileKey) {
+            if (g.getType.containsField("pos_start")) {
+              starts += g.getLong("pos_start", 0); ends += g.getLong("pos_end", 0)
+            } else {
+              val p = g.getLong("pos", 0); starts += p; ends += p
+            }
+          }
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    DeletedRows.fromRuns(starts.result(), ends.result())
+  }
+
   /** Fresh helper-column names per call: a table column named
     * `__dv_file` must not break DV reads.
     */
@@ -314,5 +362,50 @@ object DeletionVectors {
         dvLookup(df.sparkSession, tablePath, files, fileCol, posCol),
         Seq(fileCol, posCol), "left_anti")
     live.filter(condition).select(col(fileCol), col(posCol))
+  }
+}
+
+/** The deleted row positions of one data file as sorted, disjoint,
+  * closed runs `[starts(i), ends(i)]` — the shape sidecars store, and
+  * a compact one for inline vectors (a clustered delete is one run).
+  * Membership is a binary search over the run starts.
+  */
+final class DeletedRows private (starts: Array[Long], ends: Array[Long])
+    extends Serializable {
+  def contains(pos: Long): Boolean = {
+    val i = java.util.Arrays.binarySearch(starts, pos)
+    i >= 0 || { val before = -i - 2; before >= 0 && ends(before) >= pos }
+  }
+}
+
+object DeletedRows {
+  val empty: DeletedRows = new DeletedRows(Array.emptyLongArray, Array.emptyLongArray)
+
+  /** Runs from single positions (an inline vector), in any order. */
+  def fromPositions(positions: Seq[Long]): DeletedRows = {
+    val ps = positions.toArray
+    fromRuns(ps, ps)
+  }
+
+  /** Runs in any order, possibly overlapping or adjacent: sorted and
+    * coalesced so every position belongs to exactly one run.
+    */
+  def fromRuns(starts: Array[Long], ends: Array[Long]): DeletedRows = {
+    val sorted = starts.indices.forall(i => i == 0 || starts(i - 1) <= starts(i))
+    val order = if (sorted) starts.indices else starts.indices.sortBy(starts(_))
+    val s = Array.newBuilder[Long]
+    val e = Array.newBuilder[Long]
+    var open = false
+    var curS = 0L
+    var curE = 0L
+    order.foreach { i =>
+      if (open && starts(i) <= curE + 1) curE = math.max(curE, ends(i))
+      else {
+        if (open) { s += curS; e += curE }
+        open = true; curS = starts(i); curE = ends(i)
+      }
+    }
+    if (open) { s += curS; e += curE }
+    new DeletedRows(s.result(), e.result())
   }
 }

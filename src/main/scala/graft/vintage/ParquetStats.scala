@@ -4,7 +4,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.types._
@@ -22,6 +28,26 @@ import org.apache.spark.sql.types._
   * skipping degrades to "may match", never to wrong answers.
   */
 object ParquetStats {
+
+  /** Footer reader over the caller's Hadoop conf. The one-argument
+    * `ParquetFileReader.open(inputFile)` builds its read options from a
+    * fresh `Configuration`, re-parsing the XML resources on every call.
+    */
+  private[vintage] def openFile(file: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+
+  /** Example-`Group` record reader over the caller's Hadoop conf: the
+    * path-based `ParquetReader.builder` builds (and parses) a fresh
+    * `Configuration` before `withConf` can replace it.
+    */
+  private[vintage] def groupReader(file: Path, conf: Configuration,
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf),
+        new HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.withFilter(filter).build()
 
   /** Top-level columns eligible for stats, capped like Delta's
     * dataSkippingNumIndexedCols so wide tables don't bloat the log.
@@ -45,7 +71,7 @@ object ParquetStats {
     */
   def read(file: Path, conf: Configuration,
            cols: Seq[(String, DataType)]): (Long, Map[String, ColStats]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = openFile(file, conf)
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq
@@ -116,7 +142,7 @@ object ParquetStats {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     if (cols.isEmpty) return Map.empty
     val fileSchema = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val r = openFile(file, conf)
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
     def renderable(p: PrimitiveType): Boolean = {
@@ -138,11 +164,9 @@ object ParquetStats {
     val projection = new MessageType("graft_bloom_projection",
       fields.map(_.asInstanceOf[org.apache.parquet.schema.Type]).asJava)
     val readConf = new Configuration(conf)
-    readConf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+    readConf.set(ReadSupport.PARQUET_READ_SCHEMA,
       projection.toString)
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
-      .withConf(readConf).build()
+    val reader = groupReader(file, readConf)
     val builders = fields.map(f => f.getName -> new StatsBloom.Builder(mBits))
     try {
       var g = reader.read()

@@ -313,7 +313,7 @@ class VintageMergeBuilder private[vintage] (
     val adds =
       if (touched.isEmpty && notMatchedClauses.isEmpty) Nil
       else VintageTable.writeFiles(spark, toWrite, table.path, dataChange = true,
-        snap.partitionColumns, tableSchema = finalSchema)
+        snap.partitionColumns, snap.properties, finalSchema)
     // mark advance only (generated = Nil skips the allocation-range
     // check: a merge rewrite mixes freshly allocated ids with the
     // touched files' OLD ids, so "everything beyond base" cannot hold)

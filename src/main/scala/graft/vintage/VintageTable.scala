@@ -198,7 +198,7 @@ class VintageTable private (
     val remaining = delSrc.filter(!coalesce(condition, lit(false)))
       .select(snap.schema.fieldNames.toIndexedSeq.map(col) ++ delIdCols: _*)
     val adds = writeFiles(spark, remaining, path, dataChange = true,
-      snap.partitionColumns)
+      snap.partitionColumns, snap.properties, snap.schema)
     commitOp(snap, "DELETE", Map("predicate" -> condition.toString),
       adds, removesFor(snap, touched), None, scope)
   }
@@ -214,8 +214,8 @@ class VintageTable private (
     * driver); files with >= `maxDeletedFraction` of their rows dead
     * rewrite copy-on-write (when most of a file dies, rewriting the
     * survivors is the cheaper plan AND keeps the table small). Reads
-    * subtract DVs via [[DeletionVectors.applyTo]]; OPTIMIZE/compaction
-    * rewrites purge them.
+    * subtract DVs via [[DeletionVectors.applyTo]], SQL-catalog reads
+    * inside the native scan; OPTIMIZE/compaction rewrites purge them.
     */
   /** Shared planning of a merge-on-read row-level op: find the LIVE
     * rows matching `condition` in the stats-pruned candidate files,
@@ -331,7 +331,8 @@ class VintageTable private (
               src.filter(!coalesce(condition, lit(false)))
                 .select(snap.schema.fieldNames.toIndexedSeq.map(col) ++
                   idCols: _*),
-              path, dataChange = true, snap.partitionColumns)
+              path, dataChange = true, snap.partitionColumns,
+              snap.properties, snap.schema)
           }
         commitOp(snap, "DELETE",
           params + ("deletionVectors" -> p.dvFiles.size.toString,
@@ -364,7 +365,7 @@ class VintageTable private (
     val updated = updSrc.select(
       updateProjection(snap, condition, set) ++ updIdCols: _*)
     val adds = writeFiles(spark, updated, path, dataChange = true,
-      snap.partitionColumns)
+      snap.partitionColumns, snap.properties, snap.schema)
     commitOp(snap, "UPDATE", Map("predicate" -> condition.toString),
       adds, removesFor(snap, touched), None, scope)
   }
@@ -411,7 +412,8 @@ class VintageTable private (
                     case None => col(c)
                   }
                 } ++ idCols: _*),
-              path, dataChange = true, snap.partitionColumns)
+              path, dataChange = true, snap.partitionColumns,
+              snap.properties, snap.schema)
           }
         // dense side: classic whole-file rewrite
         val rewriteAdds =
@@ -420,7 +422,8 @@ class VintageTable private (
             val (src, idCols) = rewriteSourceExact(snap, p.rewriteFiles)
             writeFiles(spark,
               src.select(updateProjection(snap, condition, set) ++ idCols: _*),
-              path, dataChange = true, snap.partitionColumns)
+              path, dataChange = true, snap.partitionColumns,
+              snap.properties, snap.schema)
           }
         commitOp(snap, "UPDATE",
           params + ("deletionVectors" -> p.dvFiles.size.toString,
@@ -468,7 +471,7 @@ class VintageTable private (
       val newSchema = ColumnMapping.evolve(snap.schema, df.schema,
         ColumnMapping.active(snap.properties))
       val adds = writeFiles(spark, df, path, dataChange, snap.partitionColumns,
-        tableSchema = newSchema)
+        snap.properties, newSchema)
       val idProps =
         if (dataChange) IdentityColumns.advance(spark, path, newSchema,
           snap.properties, adds, genIds)
@@ -587,7 +590,7 @@ class VintageTable private (
           val adds = writeFiles(spark,
             df.select(finalSchema.fieldNames.map(col).toIndexedSeq: _*),
             path, dataChange = true, snap.partitionColumns,
-            tableSchema = finalSchema)
+            snap.properties, finalSchema)
           val idProps = IdentityColumns.advance(spark, path, finalSchema,
             snap.properties, adds, genIds)
           val params =
@@ -711,7 +714,7 @@ class VintageTable private (
     val aligned = df.select(snap.schema.fields.toIndexedSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     val adds = writeFiles(spark, aligned, path, dataChange = true,
-      snap.partitionColumns)
+      snap.partitionColumns, snap.properties, snap.schema)
     val markers = fresh.map(f => IngestedFile(VintageTable.canonicalKey(f)))
     commitOp(snap, "COPY INTO",
       Map("source" -> srcAbs, "numFiles" -> fresh.size.toString,
@@ -1194,7 +1197,8 @@ class VintageTable private (
       if (Bucketing.spec(snap.properties).isDefined) rows
       else rows.repartition(numFiles)
     val adds = writeFiles(spark, arranged,
-      path, dataChange = false, snap.partitionColumns)
+      path, dataChange = false, snap.partitionColumns, snap.properties,
+      snap.schema)
     commitOp(snap, "WRITE",
       Map("mode" -> "Overwrite", "dataChange" -> "false"),
       adds, snap.files.map(f =>
@@ -1231,7 +1235,7 @@ class VintageTable private (
       else if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
       else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
     val adds = writeFiles(spark, arranged, path,
-      dataChange = false, snap.partitionColumns)
+      dataChange = false, snap.partitionColumns, snap.properties, snap.schema)
     commitOp(snap, "OPTIMIZE",
       Map("dataChange" -> "false", "filesRewritten" -> selected.size.toString,
           "targetFileBytes" -> targetFileBytes.toString),
@@ -1272,7 +1276,7 @@ class VintageTable private (
       else if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
       else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
     val adds = writeFiles(spark, arranged, path,
-      dataChange = false, snap.partitionColumns)
+      dataChange = false, snap.partitionColumns, snap.properties, snap.schema)
     commitOp(snap, "WRITE",
       Map("mode" -> "Overwrite", "dataChange" -> "false",
           "predicate" -> condition.toString),
@@ -1311,7 +1315,7 @@ class VintageTable private (
           .drop(zName)
       }
     val adds = writeFiles(spark, clustered, path, dataChange = false,
-      snap.partitionColumns)
+      snap.partitionColumns, snap.properties, snap.schema)
     commitOp(snap, "CLUSTER",
       Map("by" -> cols.mkString(","), "dataChange" -> "false"),
       adds, snap.files.map(f =>
@@ -2323,7 +2327,7 @@ object VintageTable {
       if (ColumnMapping.active(properties)) ColumnMapping.stamp(df1.schema)
       else df1.schema
     val adds0 = writeFiles(spark, df1, abs, dataChange = true, partitionBy,
-      tableProps = properties, tableSchema = schema0)
+      properties, schema0)
     val (adds, hwm) = assignRowIds(adds0, properties, from = 0L)
     val info = CommitInfo(0L, System.currentTimeMillis(), "WRITE",
       Map("mode" -> "Overwrite",
@@ -2480,30 +2484,25 @@ object VintageTable {
     * `p1=v1/.../part-*.parquet` layout; each file keeps its partition
     * subpath when renamed into the table and records its
     * partitionValues in the AddFile.
+    *
+    * `props` and `tableSchema` come from the snapshot the caller
+    * commits against (or the evolved schema it commits): a metadata
+    * change racing the write fails the commit in `commitOp`.
     */
   private[vintage] def writeFiles(
       spark: SparkSession, df: DataFrame, tableDir: String,
-      dataChange: Boolean, partitionBy: Seq[String] = Nil,
-      tableProps: Map[String, String] = null,
-      tableSchema: StructType = null): Seq[AddFile] = {
+      dataChange: Boolean, partitionBy: Seq[String],
+      props: Map[String, String], tableSchema: StructType): Seq[AddFile] = {
     val dir = new HPath(tableDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new HPath(tableDir, s".tmp-${UUID.randomUUID().toString.take(8)}")
-    val props =
-      if (tableProps != null) tableProps
-      else if (VintageLog.exists(tableDir)) VintageLog.replay(tableDir).properties
-      else Map.empty[String, String]
     // column mapping: the incoming frame is in LOGICAL names (that is
     // what constraints and callers speak); the files must store
-    // PHYSICAL names. The mapping source is the table schema — passed
-    // by schema-evolving callers, replayed otherwise.
-    val mapSchema =
-      if (tableSchema != null) tableSchema
-      else if (VintageLog.exists(tableDir)) VintageLog.replay(tableDir).schema
-      else null
-    val mappingOn = mapSchema != null && ColumnMapping.mapped(mapSchema)
+    // PHYSICAL names. The mapping source is the caller's table schema —
+    // the snapshot it planned against, or the evolved schema it commits.
+    val mappingOn = ColumnMapping.mapped(tableSchema)
     def phys(c: String): String =
-      if (mappingOn) ColumnMapping.toPhysical(mapSchema, c) else c
+      if (mappingOn) ColumnMapping.toPhysical(tableSchema, c) else c
     // CHECK constraints ride inside the write plan (codegen'd filter
     // that raises on violation) — layout-only rewrites (compaction,
     // clustering) skip the check: their rows were validated when first

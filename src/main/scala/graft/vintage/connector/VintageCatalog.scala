@@ -33,8 +33,9 @@ import graft.vintage.{Snapshot, VintageLog, VintageTable}
   *
   * Time travel lands on `loadTable(ident, version|timestamp)` (the SQL
   * `VERSION AS OF` surface of SURVEY §2.1 S4); reads go through the
-  * native columnar DSv2 scan ([[VintageNativeScan]], stat- and
-  * partition-pruned); writes and deletes commit through
+  * native DSv2 scan ([[VintageNativeScan]], stat- and partition-pruned,
+  * columnar unless deletion vectors apply, which it subtracts per
+  * file); writes and deletes commit through
   * [[VintageTable]]. MERGE INTO and UPDATE SQL are resolved by the
   * injected [[VintageSqlExtension]] rule onto the fluent builders, and
   * OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY by its delegating
@@ -541,20 +542,8 @@ class VintageSqlTable(
           // row-level operations scan through
           if (wantsRowId)
             new VintageRowLevel.RowIdV1Scan(tablePath, snapshot, required, pushed)
-          // merge-on-read: deletion vectors subtract rows via a plan-
-          // level anti-join, which the columnar native scan cannot
-          // express — route through the V1 bridge until OPTIMIZE
-          // purges the DVs (VintageAggregates stays in charge of the
-          // metadata-answerable cases either way). A SPILLED snapshot
-          // decides from the protocol instead of the file list (the
-          // per-file check would materialize it): DV-feature tables
-          // conservatively take the V1 bridge, others stay columnar.
-          else if (snapshot.spilled match {
-            case Some(_) => snapshot.protocol.readerFeatures
-              .contains("deletionVectors")
-            case None => graft.vintage.DeletionVectors.hasDvs(snapshot.files)
-          })
-            new DvRelations.DvV1Scan(tablePath, snapshot, required, pushed)
+          // every other read, deletion vectors included: the native
+          // scan subtracts them per file from its stats-pruned list
           else
             new VintageNativeScan(spark, tablePath, snapshot, required, pushed)
       }

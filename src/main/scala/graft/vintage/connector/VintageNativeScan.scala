@@ -2,21 +2,24 @@ package graft.vintage.connector
 
 import java.util.OptionalLong
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.parquet.hadoop.ParquetInputFormat
 
-import graft.vintage.{ColumnMapping, FileSkipping, PartitionPaths, Snapshot}
+import graft.vintage.{AddFile, ColumnMapping, DeletedRows, DeletionVectors, FileSkipping, PartitionPaths, Snapshot}
 
 /** Native DSv2 scan over a vintage snapshot: plans one task set from
   * the log-derived, stats-pruned file list and reads through Spark's
@@ -30,6 +33,12 @@ import graft.vintage.{ColumnMapping, FileSkipping, PartitionPaths, Snapshot}
   * (partition values included as synthetic stats); large files are
   * split at the session's maxPartitionBytes and packed with Spark's
   * own bin-packing, identical to the DSv1 scan path.
+  *
+  * Deletion vectors are subtracted inside the scan: when any pruned
+  * file carries one, the reader factory is a [[DvFilteringReaderFactory]]
+  * that reads each file with its parquet row index and drops the
+  * file's deleted positions — no join, no extra job, current and
+  * time-travel snapshots alike.
   */
 class VintageNativeScan(
     spark: SparkSession, tablePath: String, snapshot: Snapshot,
@@ -57,7 +66,7 @@ class VintageNativeScan(
 
   override def description(): String =
     s"VintageNativeScan $tablePath v${snapshot.version} " +
-    s"filters=[${pushedFilters.mkString(", ")}]"
+    s"filters=[${pushedFilters.mkString(", ")}] dvFiles=${dvFiles.size}"
 
   /** Stats-pruned candidate files for the pushed filters — shared by
     * partition planning and the statistics report.
@@ -67,6 +76,9 @@ class VintageNativeScan(
       spark, snapshot, ColumnExpr.expr(cond))
     case None => snapshot.statFiles
   }
+
+  /** Pruned files carrying a deletion vector, inline or sidecar. */
+  private lazy val dvFiles: Seq[AddFile] = pruned.filter(_.hasDv)
 
   /** Log-derived statistics AFTER file pruning, so the catalyst join
     * planner sees real sizes (a dimension-table scan under a selective
@@ -124,7 +136,13 @@ class VintageNativeScan(
     val conf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
     val physDataSchema = toPhys(dataSchema)
-    val physReadDataSchema = toPhys(readDataSchema)
+    // with deletion vectors every file is read with its row index as a
+    // trailing data column — NULLABLE, since the vectorized reader
+    // rejects a required column that is missing from the file
+    val physReadDataSchema =
+      if (dvFiles.isEmpty) toPhys(readDataSchema)
+      else toPhys(readDataSchema).add(StructField(
+        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
     val readDataSchemaJson = physReadDataSchema.json
     hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
@@ -144,14 +162,86 @@ class VintageNativeScan(
       conf.parquetFieldIdReadEnabled)
     hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
       conf.parquetInferTimestampNTZEnabled)
-    ParquetPartitionReaderFactory(
+    val confBc = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    val parquet = ParquetPartitionReaderFactory(
       conf,
-      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
+      confBc,
       physDataSchema,
       physReadDataSchema,
       readPartitionSchema,
       dataFilters,
       None,
       new ParquetOptions(Map.empty[String, String], conf))
+    if (dvFiles.isEmpty) parquet
+    else {
+      // keyed like the PartitionedFiles planInputPartitions builds
+      def key(f: AddFile): String =
+        SparkPath.fromPathString(f.absolutePath(tablePath)).urlEncoded
+      // inline vectors ride in the factory; sidecars are only named
+      // here and load in the task that reads the file
+      val (sidecar, inline) = dvFiles.partition(_.dvRef.isDefined)
+      new DvFilteringReaderFactory(parquet,
+        inline.map(f => key(f) -> DeletedRows.fromPositions(f.dv)).toMap,
+        sidecar.map(f => key(f) -> (
+          AddFile.resolve(tablePath, f.dvRef.get.path),
+          DeletionVectors.fileKey(f.absolutePath(tablePath)))).toMap,
+        confBc,
+        rowIndexOrdinal = physReadDataSchema.length - 1,
+        rowTypes = (physReadDataSchema ++ readPartitionSchema).map(_.dataType))
+    }
+  }
+}
+
+/** Parquet reads of a scan whose files carry deletion vectors. Each
+  * file's rows arrive from Spark's parquet reader with the row index at
+  * `rowIndexOrdinal` (file-global, so a file split over several tasks
+  * needs no offset); a row survives when its index is not among the
+  * file's deleted positions, and the index is projected away.
+  *
+  * `inline` maps a file (its URL-encoded path) to its deleted rows;
+  * `sidecars` maps a file to (sidecar dir, canonical file key), read
+  * by the task through [[DeletionVectors.readSidecar]] — never
+  * collected on the driver. Rows only: one scan cannot mix row and
+  * columnar partitions, so DV scans give up columnar batches while
+  * DV-free scans keep them.
+  */
+private[connector] final class DvFilteringReaderFactory(
+    parquet: ParquetPartitionReaderFactory,
+    inline: Map[String, DeletedRows],
+    sidecars: Map[String, (String, String)],
+    conf: Broadcast[SerializableConfiguration],
+    rowIndexOrdinal: Int,
+    rowTypes: Seq[DataType]) extends FilePartitionReaderFactory {
+
+  override def options: FileSourceOptions = parquet.options
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = false
+
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
+    val path = file.urlEncodedPath
+    val deleted = inline.getOrElse(path, sidecars.get(path) match {
+      case Some((dir, fileKey)) =>
+        DeletionVectors.readSidecar(dir, fileKey, conf.value.value)
+      case None => DeletedRows.empty
+    })
+    val dropIndex = UnsafeProjection.create(rowTypes.indices
+      .filter(_ != rowIndexOrdinal)
+      .map(i => BoundReference(i, rowTypes(i), nullable = true)))
+    val rows = parquet.buildReader(file)
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (rows.next()) {
+          val row = rows.get()
+          if (!deleted.contains(row.getLong(rowIndexOrdinal))) {
+            current = dropIndex(row)
+            return true
+          }
+        }
+        false
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = rows.close()
+    }
   }
 }

@@ -97,9 +97,9 @@ object VintageRowLevel {
     df.select(columns.map(org.apache.spark.sql.functions.col): _*).rdd
   }
 
-  /** V1 scan producing the row-id frame (same seam as
-    * [[DvRelations.DvV1Scan]] — the anti-join and the metadata columns
-    * are DataFrame plans, not columnar batches).
+  /** V1 scan producing the row-id frame: the metadata columns and the
+    * deletion-vector anti-join of [[graft.vintage.DeletionVectors.applyTo]]
+    * are DataFrame plans, bridged through Spark's V1 seam.
     */
   final class RowIdV1Scan(tablePath: String, snap: Snapshot,
       required: StructType, pushed: Array[Filter]) extends V1Scan {
@@ -159,7 +159,8 @@ class VintageRowLevelOperation(
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
         // pruning only — every filter stays residual and Spark
-        // re-applies it above the scan (same contract as DvV1Scan)
+        // re-applies it above the scan (same contract as the catalog's
+        // read scan builder)
         pushed = filters.filter(f => Filters.toColumn(f).isDefined)
         filters
       }

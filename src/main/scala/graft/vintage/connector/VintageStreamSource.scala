@@ -314,7 +314,7 @@ class VintageStreamSource(
       VintageRelation(spark, tablePath, snap.copy(schema = schema)))
     // deletion vectors: the initial snapshot (and a RESTORE-re-added
     // file) must not emit deleted positions — a stream-static broadcast
-    // anti-join on (file, row_index), the same plan as batch reads
+    // anti-join on (file, row_index), the same plan as batch `toDF` reads
     if (!graft.vintage.DeletionVectors.hasDvs(snap.files)) base
     else graft.vintage.DeletionVectors.applyTo(base, tablePath, snap.files,
       schema.fieldNames.toSeq.map(org.apache.spark.sql.functions.col))

@@ -531,13 +531,20 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(t.toDF.count() == 80 + 10)
   }
 
-  /** Records read across all tasks while `body` runs — the observable
-    * for file-level pruning through the V1 DV/row-level frames, whose
-    * inner parquet scan is invisible to the OUTER executed plan.
+  private case class Observed(jobs: Long, recordsRead: Long)
+
+  /** Spark jobs started and records read across all tasks while `body`
+    * runs — the observables for file-level pruning through the V1
+    * DV/row-level frames, whose inner parquet scan is invisible to the
+    * OUTER executed plan, and for planning-time jobs.
     */
-  private def recordsReadDuring(body: => Unit): Long = {
+  private def observe(body: => Unit): Observed = {
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
     val read = new java.util.concurrent.atomic.AtomicLong()
     val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null)
@@ -552,7 +559,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       while (System.currentTimeMillis() < deadline && read.get() != last) {
         last = read.get(); Thread.sleep(200)
       }
-      read.get()
+      Observed(jobs.get(), read.get())
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -565,10 +572,10 @@ class DeletionVectorSpec extends AnyFunSuite {
       properties = DvProps)
     t.delete(col("id") === 5) // DV forces the V1 fallback read path
     assert(t.snapshot.files.exists(_.hasDv))
-    val read = recordsReadDuring {
+    val read = observe {
       assert(spark.read.format("vintage").load(dir)
         .filter(col("id") === 250).count() == 1)
-    }
+    }.recordsRead
     // pruned: ~1 file of ~100 rows (+ tiny DV lookup); unpruned: 300
     assert(read < 200, s"DV fallback scan must stat-prune files, read $read rows")
   }
@@ -582,11 +589,11 @@ class DeletionVectorSpec extends AnyFunSuite {
       VintageTable.create(spark, s"$dir/t",
         (1L to 300L).map(i => (i, s"n$i")).toDF("id", "name")
           .repartitionByRange(3, col("id")).sortWithinPartitions("id"))
-      val read = recordsReadDuring {
+      val read = observe {
         // the modulo conjunct is untranslatable (forces the row-level
         // path); the range conjunct prunes files
         spark.sql("UPDATE dvpr.t SET name = 'x' WHERE id = 250 AND id % 2 = 0")
-      }
+      }.recordsRead
       assert(spark.sql("SELECT count(*) FROM dvpr.t WHERE name = 'x'")
         .head().getLong(0) == 1)
       assert(read < 200,
@@ -594,6 +601,200 @@ class DeletionVectorSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.sql.catalog.dvpr")
       spark.conf.unset("spark.sql.catalog.dvpr.warehouse")
+    }
+  }
+
+  // ------------------------------------------- SQL-catalog DV reads
+
+  /** Runs `body` with a vintage catalog `name` over `warehouse`. */
+  private def withCatalog[A](name: String, warehouse: String)(body: => A): A = {
+    spark.conf.set(s"spark.sql.catalog.$name",
+      "graft.vintage.connector.VintageCatalog")
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    try body
+    finally {
+      spark.conf.unset(s"spark.sql.catalog.$name")
+      spark.conf.unset(s"spark.sql.catalog.$name.warehouse")
+    }
+  }
+
+  /** A table at `<tmp>/t`, so its catalog warehouse is the parent. */
+  private def warehouseOf(dir: String): String =
+    new java.io.File(dir).getParent
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The SQL-catalog read `SELECT * FROM sqlName [VERSION AS OF v] [WHERE
+    * where]` returns exactly what `toDF` returns for the same snapshot,
+    * and plans the native scan with no join and no broadcast.
+    */
+  private def assertSqlMatchesToDF(t: VintageTable, sqlName: String,
+      version: Option[Long], where: Option[String] = None): Unit = {
+    val asOf = version.fold("")(v => s" VERSION AS OF $v")
+    val text = s"SELECT * FROM $sqlName$asOf" + where.fold("")(w => s" WHERE $w")
+    val df = spark.sql(text)
+    val base = version.fold(t.toDF)(t.toDFAsOf)
+    val want = where.fold(base)(w => base.filter(expr(w)))
+    assert(rowsOf(df) == rowsOf(want), text)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("VintageNativeScan"), s"$text:\n$plan")
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"),
+      s"$text must subtract deletion vectors inside the scan:\n$plan")
+  }
+
+  test("SQL reads of inline, sidecar and superseded-sidecar DVs match toDF") {
+    val dir = newDir("sql-tiers")
+    val t = VintageTable.create(spark, dir,
+      (1L to 200L).map(i => (i, s"n$i")).toDF("id", "name").repartition(2),
+      properties = SidecarProps)
+    t.delete(col("id") % 50 === 0)        // v1: inline, 2 per file at most
+    t.delete(col("id").between(60, 90))   // v2: grows past the cap: sidecar
+    t.delete(col("id").between(100, 120)) // v3: a new sidecar supersedes v2's
+    val refs = t.snapshot.files.flatMap(_.dvRef)
+    assert(refs.size == 2 && refs.map(_.path).distinct.size == 1,
+      "both files' vectors share one sidecar")
+    assert(t.snapshotAt(1).files.exists(_.dv.nonEmpty))
+    withCatalog("dvsql", warehouseOf(dir)) {
+      (None +: (0L to 3L).map(Some(_))).foreach(v =>
+        assertSqlMatchesToDF(t, "dvsql.t", v))
+      // parquet may apply the sidecar's file-key predicate to row groups
+      // only: the other file's rows must still not apply
+      spark.conf.set("parquet.filter.record-level.enabled", "false")
+      try assertSqlMatchesToDF(t, "dvsql.t", None)
+      finally spark.conf.unset("parquet.filter.record-level.enabled")
+      assertSqlMatchesToDF(t, "dvsql.t", None, Some("id BETWEEN 55 AND 125"))
+      assertSqlMatchesToDF(t, "dvsql.t", Some(2L), Some("id >= 100"))
+      val desc = spark.sql("SELECT * FROM dvsql.t").queryExecution
+        .executedPlan.toString
+      assert(desc.contains("dvFiles="), desc)
+    }
+  }
+
+  test("a legacy single-position sidecar reads the same through SQL") {
+    val dir = newDir("sql-legacy")
+    val t = VintageTable.create(spark, dir,
+      (1L to 100L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1),
+      properties = SidecarProps)
+    t.delete(col("id") <= 20 || col("id") === 50)
+    val sidecar = s"$dir/${t.snapshot.files.head.dvRef.get.path}"
+    // rewrite the sidecar in the format written before run-length
+    // encoding: one (file_key, pos) row per position, here unsorted
+    val positions = spark.read.parquet(sidecar)
+      .select(col("file_key"),
+        explode(sequence(col("pos_start"), col("pos_end"))).as("pos"))
+      .as[(String, Long)].collect().toSeq
+    val hp = new org.apache.hadoop.fs.Path(sidecar)
+    hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
+    positions.toDF("file_key", "pos").orderBy(desc("pos")).coalesce(1)
+      .write.parquet(sidecar)
+    assert(t.toDF.count() == 79)
+    withCatalog("dvlegacy", warehouseOf(dir)) {
+      assertSqlMatchesToDF(t, "dvlegacy.t", None)
+      assertSqlMatchesToDF(t, "dvlegacy.t", None, Some("id BETWEEN 15 AND 55"))
+    }
+  }
+
+  test("SQL reads of hive-partitioned and column-mapped DV tables match toDF") {
+    val pdir = newDir("sql-part")
+    val pt = VintageTable.create(spark, pdir,
+      (1L to 60L).map(i => (i, i % 3, s"n$i")).toDF("id", "p", "name"),
+      properties = DvProps, partitionBy = Seq("p"))
+    pt.delete(col("p") === 1 && col("id") <= 10)
+    withCatalog("dvpart", warehouseOf(pdir)) {
+      assertSqlMatchesToDF(pt, "dvpart.t", None)
+      assertSqlMatchesToDF(pt, "dvpart.t", None, Some("p = 1"))
+      assertSqlMatchesToDF(pt, "dvpart.t", Some(0L), Some("p = 1"))
+    }
+
+    val mdir = newDir("sql-colmap")
+    val mt = VintageTable.create(spark, mdir,
+      (1L to 60L).map(i => (i, s"n$i", i * 1.5)).toDF("id", "name", "amount")
+        .repartition(2),
+      properties = DvProps + (ColumnMapping.ModeProp -> "name"))
+    mt.delete(col("id") % 7 === 0)
+    mt.renameColumn("amount", "price") // logical names now differ from the files'
+    mt.delete(col("price") > 80.0)
+    withCatalog("dvmap", warehouseOf(mdir)) {
+      assertSqlMatchesToDF(mt, "dvmap.t", None)
+      assertSqlMatchesToDF(mt, "dvmap.t", None, Some("price < 30.0"))
+      assertSqlMatchesToDF(mt, "dvmap.t", Some(1L))
+    }
+  }
+
+  test("a DV file split over several tasks keeps file-global row indexes") {
+    val dir = newDir("sql-split")
+    // small row groups, so the one data file splits into several tasks
+    spark.conf.set("parquet.block.size", "8192")
+    val t = try VintageTable.create(spark, dir,
+        (1L to 20000L).map(i => (i, s"name-$i")).toDF("id", "name").coalesce(1),
+        properties = DvProps + (DeletionVectors.MaxInlineProp -> "500"))
+      finally spark.conf.unset("parquet.block.size")
+    val file = t.snapshot.files.head
+    val blocks = {
+      val r = ParquetStats.openFile(
+        new org.apache.hadoop.fs.Path(file.absolutePath(dir)),
+        spark.sessionState.newHadoopConf())
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    assert(blocks > 4, s"expected several row groups, got $blocks")
+    t.delete(col("id") % 101 === 0) // v1: inline
+    t.delete(col("id") % 7 === 0)   // v2: past the cap: sidecar
+    assert(t.snapshotAt(1).files.head.dv.nonEmpty)
+    assert(t.snapshot.files.head.dvRef.isDefined)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (file.size / 4).toString)
+    try withCatalog("dvsplit", warehouseOf(dir)) {
+      assert(spark.sql("SELECT * FROM dvsplit.t").rdd.getNumPartitions > 1)
+      assertSqlMatchesToDF(t, "dvsplit.t", None)
+      assertSqlMatchesToDF(t, "dvsplit.t", Some(1L))
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  test("SQL VERSION AS OF a checkpoint-replayed DV and a spilled snapshot") {
+    val dir = newDir("sql-checkpoint")
+    val t = VintageTable.create(spark, dir,
+      (1L to 40L).map(i => (i, s"n$i")).toDF("id", "name").repartition(4),
+      properties = DvProps)
+    t.delete(col("id") % 5 === 0) // v1
+    (1 to 10).foreach(i =>
+      t.append(Seq((100L + i, s"x$i")).toDF("id", "name").coalesce(1)))
+    t.delete(col("id") === 101)   // v12: DV on a tail file
+    val prev = VintageLog.spillThreshold
+    try withCatalog("dvcp", warehouseOf(dir)) {
+      VintageLog.clearSnapshotCache()
+      assertSqlMatchesToDF(t, "dvcp.t", Some(VintageLog.checkpointInterval))
+      assertSqlMatchesToDF(t, "dvcp.t", None)
+      // past the threshold the checkpoint spills: reads plan from the
+      // spilled index, pruned distributed under a predicate
+      VintageLog.spillThreshold = 5
+      VintageLog.clearSnapshotCache()
+      assert(t.snapshot.spilled.isDefined)
+      assertSqlMatchesToDF(t, "dvcp.t", None)
+      assertSqlMatchesToDF(t, "dvcp.t", None, Some("id <= 20"))
+      assertSqlMatchesToDF(t, "dvcp.t", Some(11L))
+    } finally {
+      VintageLog.spillThreshold = prev
+      VintageLog.clearSnapshotCache()
+    }
+  }
+
+  test("a DV point lookup runs one Spark job through the native scan") {
+    val dir = newDir("sql-lookup")
+    val t = VintageTable.create(spark, dir,
+      (1L to 300L).map(i => (i, s"n$i")).toDF("id", "name")
+        .repartitionByRange(3, col("id")).sortWithinPartitions("id"),
+      properties = DvProps)
+    t.delete(col("id") === 5 || col("id") === 250)
+    withCatalog("dvlook", warehouseOf(dir)) {
+      val lookup = "SELECT name FROM dvlook.t WHERE id = 251"
+      spark.sql(lookup).collect() // warm the snapshot cache
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val seen = observe { rows = spark.sql(lookup).collect() }
+      assert(rows.map(_.getString(0)).toSeq == Seq("n251"))
+      assert(seen.jobs == 1, s"a DV point lookup ran ${seen.jobs} jobs")
+      assert(seen.recordsRead <= 100, "the lookup must read one pruned file")
+      assert(spark.sql("SELECT count(*) FROM dvlook.t WHERE id = 250")
+        .head().getLong(0) == 0)
     }
   }
 
