@@ -41,15 +41,6 @@ object Contamination {
       .otherwise(array_distinct(grams))
   }
 
-  /** Distinct word n-grams of the whitespace-tokenized lowercased
-    * text (same token normalization as [[TextAnalysis.tokens]]).
-    * Prefer projecting [[TextAnalysis.tokens]] into a column and
-    * calling [[distinctNGramsOfTokens]] when used per-row at scale
-    * (see that method's note).
-    */
-  def distinctWordNGrams(c: Column, n: Int): Column =
-    distinctNGramsOfTokens(TextAnalysis.tokens(c), n)
-
   /** For every train document sharing at least one word `n`-gram with
     * any benchmark document: (train id, distinct benchmark docs hit,
     * distinct shared grams). Grams occurring in more than

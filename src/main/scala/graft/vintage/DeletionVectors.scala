@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   * reader, pushed filters, and column pruning underneath are untouched.
   * SQL-catalog reads skip the join: the native scan
   * (`connector.VintageNativeScan`) reads the same row index and drops
-  * each file's [[DeletedRows]] as rows leave the parquet reader.
+  * each file's [[DeletedRows]] as rows leave the parquet reader — for
+  * plain reads and for the target scans of SQL MERGE INTO, UPDATE and
+  * DELETE alike. The join remains for `toDF`, `format("vintage")`,
+  * streaming and the fluent DML planners.
   *
   * DV storage is three-tier per file, graded by cardinality:
   *   - INLINE (<= `maxInline` positions AND within the commit-wide

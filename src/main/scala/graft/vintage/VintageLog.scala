@@ -20,9 +20,6 @@ case class Snapshot(
     protocol: Protocol = Protocol.base,
     rowIdHwm: Long = 0L,
     spilled: Option[SpilledIndex] = None) {
-  def filePaths(tableDir: String): Seq[String] =
-    files.map(_.absolutePath(tableDir))
-
   /** Files with synthetic min=max=value stats for partition columns —
     * feed THESE to [[FileSkipping]] so partition predicates prune with
     * the same machinery as data stats.

@@ -58,8 +58,8 @@ class VintageTable private (
     dfForFiles(s, s.files)
 
   /** [[dfForSnapshot]] over an explicit (log-stats-PRUNED) file
-    * subset: the DV fallback and row-level scans pass the
-    * [[candidateFiles]] of their pushed filters, so a predicate scan
+    * subset: the `format("vintage")` DV read passes the
+    * [[candidateFiles]] of its pushed filters, so a predicate scan
     * of a DV-carrying 100 TB table opens the files whose stat range
     * may match — not every footer in the table. The DV anti-join set
     * is built from the same subset.
@@ -77,80 +77,6 @@ class VintageTable private (
       DeletionVectors.applyTo(
         readerFor(s).parquet(files.map(_.absolutePath(path)): _*),
         path, files, logicalCols(s))
-
-  /** [[dfForSnapshot]] plus the position row-id columns (canonical
-    * file key, physical row index) the native row-level operations
-    * identify rows by — deletion vectors applied, so only LIVE rows
-    * appear and their positions are the pre-DV physical ones (exactly
-    * what a DV grow commit needs).
-    */
-  private[vintage] def dfForSnapshotWithRowId(
-      s: Snapshot, fileColName: String, posColName: String): DataFrame =
-    dfForFilesWithRowId(s, s.files, fileColName, posColName)
-
-  private[vintage] def dfForFilesWithRowId(
-      s: Snapshot, files: Seq[AddFile],
-      fileColName: String, posColName: String): DataFrame =
-    if (files.isEmpty) {
-      val schema = org.apache.spark.sql.types.StructType(s.schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(fileColName,
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField(posColName,
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      DeletionVectors.applyTo(
-        readerFor(s).parquet(files.map(_.absolutePath(path)): _*),
-        path, files,
-        logicalCols(s) :+
-          DeletionVectors.fileKeyExpr(col("_metadata.file_path")).as(fileColName) :+
-          col("_metadata.row_index").as(posColName))
-
-  /** [[dfForFilesWithRowId]] plus the row-tracking id as a third,
-    * NON-nullable metadata column (Spark's row-level rewrite rejects
-    * nullable row-id attrs): the materialized `_vintage_row_id` when
-    * the file carries one, else `baseRowId + row_index`, else `-1` for
-    * rows written before tracking was enabled (the delta writer maps
-    * the sentinel back to null). This is what lets the native SQL
-    * UPDATE/MERGE WriteDelta path preserve survivors' ids — the id
-    * read here rides the update verdict into the re-inserted row.
-    */
-  private[vintage] def dfForFilesWithRowIdTracked(
-      s: Snapshot, files: Seq[AddFile],
-      fileColName: String, posColName: String, idColName: String): DataFrame = {
-    val outSchema = org.apache.spark.sql.types.StructType(s.schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(fileColName,
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField(posColName,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idColName,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    val readSchema = ColumnMapping.physicalSchema(s.schema)
-      .add(RowTracking.MaterializedCol,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    val rd = spark.read.schema(readSchema)
-    val raw = (if (s.partitionColumns.nonEmpty) rd.option("basePath", path)
-               else rd)
-      .parquet(files.map(_.absolutePath(path)): _*)
-    val matC = "__rt_mat"; val keyC = "__rt_key"; val baseC = "__rt_base"
-    val live = DeletionVectors.applyTo(raw, path, files,
-      logicalCols(s) ++ Seq(
-        col(RowTracking.MaterializedCol).as(matC),
-        DeletionVectors.fileKeyExpr(col("_metadata.file_path")).as(fileColName),
-        col("_metadata.row_index").as(posColName)))
-    import spark.implicits._
-    val bases = files
-      .map(f => (DeletionVectors.fileKey(f.absolutePath(path)), f.baseRowId))
-      .toDF(keyC, baseC)
-    live.join(broadcast(bases), col(fileColName) === col(keyC), "left")
-      .withColumn(idColName,
-        coalesce(col(matC), col(baseC) + col(posColName), lit(-1L)))
-      .drop(keyC, matC, baseC)
-  }
 
   /** Version history, newest first — reproduces the operation log shape
     * at README.md:307-319.
@@ -203,34 +129,18 @@ class VintageTable private (
       adds, removesFor(snap, touched), None, scope)
   }
 
-  /** Merge-on-read delete (`vintage.deletionVectors.enabled`): instead
-    * of rewriting every touched file, record the matching rows' file
-    * positions as deletion vectors — commit cost is O(deleted rows),
-    * not O(touched bytes), the decisive difference for sparse deletes
-    * at 100 TB. Per-file three-tier hybrid, graded by cardinality:
-    * vectors within `vintage.deletionVectors.maxInline` inline in the
-    * log; wider-but-sparse vectors go to a parquet SIDECAR under
-    * `_vintage_dv/` (written distributed — positions never touch the
-    * driver); files with >= `maxDeletedFraction` of their rows dead
-    * rewrite copy-on-write (when most of a file dies, rewriting the
-    * survivors is the cheaper plan AND keeps the table small). Reads
-    * subtract DVs via [[DeletionVectors.applyTo]], SQL-catalog reads
-    * inside the native scan; OPTIMIZE/compaction rewrites purge them.
-    */
   /** Shared planning of a merge-on-read row-level op: find the LIVE
     * rows matching `condition` in the stats-pruned candidate files,
-    * then split the touched files into the three tiers — inline
-    * DV-marked AddFiles (`marked`), sidecar-referencing AddFiles
-    * (`sidecarMarked`, whose shared sidecar this writes), and
-    * copy-on-write rewrites (`rewriteFiles`). `None` = nothing
+    * then split the touched files into the three tiers — DV-marked
+    * AddFiles (`marked`: inline vectors, or references to the shared
+    * sidecar this writes) and copy-on-write rewrites
+    * (`rewriteFiles`). `None` = nothing
     * matched. The matches frame is persisted for the jobs that reuse
     * it (counts, inline positions, sidecar write) so candidates are
     * scanned once, and unpersisted before returning.
     */
-  private case class MorPlan(marked: Seq[AddFile], sidecarMarked: Seq[AddFile],
-      dvFiles: Seq[AddFile], rewriteFiles: Seq[AddFile]) {
-    def touchedPaths: Set[String] = (dvFiles ++ rewriteFiles).map(_.path).toSet
-  }
+  private case class MorPlan(marked: Seq[AddFile], dvFiles: Seq[AddFile],
+      rewriteFiles: Seq[AddFile])
 
   private def planMergeOnRead(
       snap: Snapshot, cands: Seq[AddFile], condition: Column): Option[MorPlan] = {
@@ -273,46 +183,27 @@ class VintageTable private (
         inlineCandidates, grown,
         DeletionVectors.remainingInlineBudget(snap, counts.keys, byKey))
       val sidecarKeys = overCapSidecar ++ demoted
-      val marked =
-        if (inlineKeys.isEmpty) Nil
-        else {
-          val dvKeySet = inlineKeys.toSet
-          val newPositions = matches
-            .filter(col(fileCol).isInCollection(dvKeySet))
-            .collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-            .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
-          inlineKeys.map { k =>
-            val f = byKey(k)
-            f.copy(dataChange = true,
-              dv = (f.dv ++ newPositions(k)).distinct.sorted)
-          }
-        }
-      val sidecarMarked =
-        if (sidecarKeys.isEmpty) Nil
-        else {
-          val scSet = sidecarKeys.toSet
-          val scFiles = sidecarKeys.map(byKey)
-          // full grown vector per file = prior positions (inline or
-          // sidecar — disjoint from the new matches by construction of
-          // livePositionsMatching) ++ new matches, written distributed
-          val newPos = matches
-            .filter(col(fileCol).isInCollection(scSet))
-            .select(col(fileCol).as("file_key"), col(posCol).as("pos"))
-          val oldPos = DeletionVectors.dvLookup(
-            spark, path, scFiles, "file_key", "pos")
-          val rel = DeletionVectors.writeSidecar(
-            newPos.unionByName(oldPos), path)
-          sidecarKeys.map { k =>
-            byKey(k).copy(dataChange = true, dv = Nil,
-              dvRef = Some(DvRef(rel, grown(k))))
-          }
-        }
-      Some(MorPlan(marked, sidecarMarked,
+      Some(MorPlan(
+        growVectors(snap, byKey, grown, inlineKeys, sidecarKeys,
+          matches.select(col(fileCol).as("file_key"), col(posCol).as("pos"))),
         (inlineKeys ++ sidecarKeys).map(byKey), rewriteKeys.map(byKey)))
     } finally matches.unpersist(blocking = false)
   }
 
+  /** Merge-on-read delete (`vintage.deletionVectors.enabled`): instead
+    * of rewriting every touched file, record the matching rows' file
+    * positions as deletion vectors — commit cost is O(deleted rows),
+    * not O(touched bytes), the decisive difference for sparse deletes
+    * at 100 TB. Per-file three-tier hybrid, graded by cardinality:
+    * vectors within `vintage.deletionVectors.maxInline` inline in the
+    * log; wider-but-sparse vectors go to a parquet SIDECAR under
+    * `_vintage_dv/` (written distributed — positions never touch the
+    * driver); files with >= `maxDeletedFraction` of their rows dead
+    * rewrite copy-on-write (when most of a file dies, rewriting the
+    * survivors is the cheaper plan AND keeps the table small). Reads
+    * subtract DVs via [[DeletionVectors.applyTo]], SQL-catalog reads
+    * inside the native scan; OPTIMIZE/compaction rewrites purge them.
+    */
   private def deleteWithDvs(snap: Snapshot, condition: Column): Unit = {
     val scope = PredicateRead(ColumnExpr.expr(condition))
     val params = Map("predicate" -> condition.toString, "mode" -> "merge-on-read")
@@ -337,7 +228,7 @@ class VintageTable private (
         commitOp(snap, "DELETE",
           params + ("deletionVectors" -> p.dvFiles.size.toString,
                     "rewrittenFiles" -> p.rewriteFiles.size.toString),
-          p.marked ++ p.sidecarMarked ++ rewriteAdds,
+          p.marked ++ rewriteAdds,
           removesForFiles(p.dvFiles ++ p.rewriteFiles), None, scope)
     }
   }
@@ -428,7 +319,7 @@ class VintageTable private (
         commitOp(snap, "UPDATE",
           params + ("deletionVectors" -> p.dvFiles.size.toString,
                     "rewrittenFiles" -> p.rewriteFiles.size.toString),
-          p.marked ++ p.sidecarMarked ++ updatedAdds ++ rewriteAdds,
+          p.marked ++ updatedAdds ++ rewriteAdds,
           removesForFiles(p.dvFiles ++ p.rewriteFiles), None, scope)
     }
   }
@@ -1136,34 +1027,6 @@ class VintageTable private (
         org.apache.spark.sql.types.StructField("pos",
           org.apache.spark.sql.types.LongType, nullable = false))))
       .parquet(positionFiles: _*)
-    val marked =
-      if (inlineKeys.isEmpty) Nil
-      else {
-        val set = inlineKeys.toSet
-        // bounded collect: <= cap positions per inline file
-        val perKey = positions.filter(col("file_key").isInCollection(set))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
-        inlineKeys.map { k =>
-          val f = byKey(k)
-          f.copy(dataChange = true,
-            dv = (f.dv ++ perKey.getOrElse(k, Array.empty[Long])).distinct.sorted)
-        }
-      }
-    val sidecarMarked =
-      if (sidecarKeys.isEmpty) Nil
-      else {
-        val set = sidecarKeys.toSet
-        val newPos = positions.filter(col("file_key").isInCollection(set))
-          .select(col("file_key"), col("pos"))
-        val oldPos = DeletionVectors.dvLookup(
-          spark, path, sidecarKeys.map(byKey), "file_key", "pos")
-        val rel = DeletionVectors.writeSidecar(newPos.unionByName(oldPos), path)
-        sidecarKeys.map { k =>
-          byKey(k).copy(dataChange = true, dv = Nil,
-            dvRef = Some(DvRef(rel, grown(k))))
-        }
-      }
     val dvPaths = (inlineKeys ++ sidecarKeys).map(byKey(_).path).toSet
     // SQL UPDATE/MERGE re-inserted rows may carry identity values past
     // the high-water mark (BY DEFAULT explicit inserts ride this path
@@ -1177,8 +1040,44 @@ class VintageTable private (
     commitOp(snap, op,
       params + ("deletionVectors" -> dvPaths.size.toString,
                 "insertedFiles" -> insertAdds.size.toString),
-      marked ++ sidecarMarked ++ insertAdds,
+      growVectors(snap, byKey, grown, inlineKeys, sidecarKeys, positions) ++
+        insertAdds,
       removesFor(snap, dvPaths), meta, FullRead): Unit
+  }
+
+  /** The DV-marked AddFiles of a merge-on-read commit, from the new
+    * deleted `positions` (`file_key`, `pos`): each of `inlineKeys`
+    * keeps its vector in the log, grown by its new positions (a
+    * bounded collect: at most the cap per file); `sidecarKeys` share
+    * one new sidecar holding their full grown vectors — prior
+    * positions (inline or sidecar, disjoint from the new ones) plus
+    * the new, written distributed. Shared by the fluent
+    * ([[planMergeOnRead]]) and SQL ([[commitDeltaRowLevel]]) paths.
+    */
+  private def growVectors(snap: Snapshot, byKey: Map[String, AddFile],
+      grown: Map[String, Long], inlineKeys: Seq[String],
+      sidecarKeys: Seq[String], positions: => DataFrame): Seq[AddFile] = {
+    def of(keys: Seq[String]) =
+      positions.filter(col("file_key").isInCollection(keys.toSet))
+    val perKey =
+      if (inlineKeys.isEmpty) Map.empty[String, Array[Long]]
+      else of(inlineKeys).collect().map(r => (r.getString(0), r.getLong(1)))
+        .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2) }
+    val marked = inlineKeys.map { k =>
+      val f = byKey(k)
+      f.copy(dataChange = true,
+        dv = (f.dv ++ perKey.getOrElse(k, Array.empty[Long])).distinct.sorted)
+    }
+    val sidecarMarked =
+      if (sidecarKeys.isEmpty) Nil
+      else {
+        val rel = DeletionVectors.writeSidecar(of(sidecarKeys).unionByName(
+          DeletionVectors.dvLookup(spark, path, sidecarKeys.map(byKey),
+            "file_key", "pos")), path)
+        sidecarKeys.map(k => byKey(k).copy(dataChange = true, dv = Nil,
+          dvRef = Some(DvRef(rel, grown(k)))))
+      }
+    marked ++ sidecarMarked
   }
 
   // --------------------------------------------------- maintenance utils
@@ -1189,21 +1088,8 @@ class VintageTable private (
     */
   def compact(numFiles: Int): Unit = {
     val snap = snapshot
-    // bucketed tables: writeFiles re-buckets unconditionally (the
-    // bucket count IS the file count), so the caller's repartition
-    // would only add a dead shuffle
-    val rows = layoutRows(snap, None)
-    val arranged =
-      if (Bucketing.spec(snap.properties).isDefined) rows
-      else rows.repartition(numFiles)
-    val adds = writeFiles(spark, arranged,
-      path, dataChange = false, snap.partitionColumns, snap.properties,
-      snap.schema)
-    commitOp(snap, "WRITE",
-      Map("mode" -> "Overwrite", "dataChange" -> "false"),
-      adds, snap.files.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+    rewriteLayout(snap, snap.files, "WRITE",
+      Map("mode" -> "Overwrite", "dataChange" -> "false"))(_.repartition(numFiles))
   }
 
   /** Bin-packing compaction — Delta's actual OPTIMIZE semantics:
@@ -1225,23 +1111,10 @@ class VintageTable private (
     val selected = snap.files.filter(f => f.size < minBytes || f.hasDv)
     // one small clean file alone cannot be packed any better
     if (selected.size < 2 && !selected.exists(_.hasDv)) return 0L
-    val sel = selected.map(_.path).toSet
-    val numFiles = math.max(1,
-      math.ceil(selected.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    val rows = layoutRows(snap, Some(sel))
-    // bucketed: skip the pre-shuffle, writeFiles re-buckets anyway
-    val arranged =
-      if (Bucketing.spec(snap.properties).isDefined) rows
-      else if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
-      else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
-    val adds = writeFiles(spark, arranged, path,
-      dataChange = false, snap.partitionColumns, snap.properties, snap.schema)
-    commitOp(snap, "OPTIMIZE",
+    rewriteLayout(snap, selected, "OPTIMIZE",
       Map("dataChange" -> "false", "filesRewritten" -> selected.size.toString,
-          "targetFileBytes" -> targetFileBytes.toString),
-      adds, selected.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+          "targetFileBytes" -> targetFileBytes.toString))(
+      binPack(snap, selected, targetFileBytes))
     selected.size.toLong
   }
 
@@ -1261,28 +1134,10 @@ class VintageTable private (
     toDF.filter(condition).queryExecution.analyzed
     val selected = candidateFiles(snap, condition)
     if (selected.isEmpty) return 0L
-    val sel = selected.map(_.path).toSet
-    val numFiles = math.max(1,
-      math.ceil(selected.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    // partitioned tables cluster by the partition columns, so each
-    // selected hive partition's rows land in ONE task and the write
-    // emits one file per partition value — a round-robin repartition
-    // would spread every partition over every task and emit up to
-    // numFiles × partitions files, fragmenting what it set out to fix
-    val rows = layoutRows(snap, Some(sel))
-    // bucketed: skip the pre-shuffle, writeFiles re-buckets anyway
-    val arranged =
-      if (Bucketing.spec(snap.properties).isDefined) rows
-      else if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
-      else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
-    val adds = writeFiles(spark, arranged, path,
-      dataChange = false, snap.partitionColumns, snap.properties, snap.schema)
-    commitOp(snap, "WRITE",
+    rewriteLayout(snap, selected, "WRITE",
       Map("mode" -> "Overwrite", "dataChange" -> "false",
-          "predicate" -> condition.toString),
-      adds, selected.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+          "predicate" -> condition.toString))(
+      binPack(snap, selected, targetFileBytes))
     selected.size.toLong
   }
 
@@ -1301,8 +1156,8 @@ class VintageTable private (
   def cluster(numFiles: Int, cols: String*): Unit = {
     require(cols.nonEmpty, "cluster needs at least one column")
     val snap = snapshot
-    val df = layoutRows(snap, None)
-    val clustered =
+    rewriteLayout(snap, snap.files, "CLUSTER",
+      Map("by" -> cols.mkString(","), "dataChange" -> "false")) { df =>
       if (cols.size == 1)
         df.repartitionByRange(numFiles, col(cols.head))
           .sortWithinPartitions(col(cols.head))
@@ -1314,13 +1169,42 @@ class VintageTable private (
           .sortWithinPartitions(col(zName))
           .drop(zName)
       }
-    val adds = writeFiles(spark, clustered, path, dataChange = false,
+    }
+  }
+
+  /** The one layout rewrite behind compact, OPTIMIZE, compactWhere and
+    * cluster: read `files`, `arrange` their rows, write them back and
+    * swap them in one layout-only (`dataChange=false`) commit.
+    * Bucketed tables skip `arrange`: writeFiles re-buckets
+    * unconditionally (the bucket count IS the file count), so the
+    * caller's shuffle would be dead work.
+    */
+  private def rewriteLayout(snap: Snapshot, files: Seq[AddFile], op: String,
+      params: Map[String, String])(arrange: DataFrame => DataFrame): Unit = {
+    val rows = layoutRows(snap, files)
+    val arranged =
+      if (Bucketing.spec(snap.properties).isDefined) rows else arrange(rows)
+    val adds = writeFiles(spark, arranged, path, dataChange = false,
       snap.partitionColumns, snap.properties, snap.schema)
-    commitOp(snap, "CLUSTER",
-      Map("by" -> cols.mkString(","), "dataChange" -> "false"),
-      adds, snap.files.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = false)),
-      None, LayoutOnly)
+    val now = System.currentTimeMillis()
+    commitOp(snap, op, params, adds,
+      files.map(f => RemoveFile(f.path, now, dataChange = false)),
+      None, LayoutOnly): Unit
+  }
+
+  /** Arrangement of a bin-packing rewrite: ~`targetFileBytes` outputs.
+    * Partitioned tables cluster by the partition columns, so each
+    * selected hive partition's rows land in ONE task and the write
+    * emits one file per partition value — a round-robin repartition
+    * would spread every partition over every task and emit up to
+    * numFiles × partitions files, fragmenting what it set out to fix.
+    */
+  private def binPack(snap: Snapshot, files: Seq[AddFile],
+      targetFileBytes: Long)(rows: DataFrame): DataFrame = {
+    val numFiles = math.max(1,
+      math.ceil(files.map(_.size).sum.toDouble / targetFileBytes).toInt)
+    if (snap.partitionColumns.isEmpty) rows.repartition(numFiles)
+    else rows.repartition(numFiles, snap.partitionColumns.map(col): _*)
   }
 
   /** Re-establish a past version as the current state
@@ -1970,11 +1854,9 @@ class VintageTable private (
     * the read appends the materialized column; readers never see it
     * (it is not in the table schema they request).
     */
-  private def layoutRows(snap: Snapshot, rel: Option[Set[String]]): DataFrame =
-    if (!RowTracking.enabled(snap.properties))
-      rel.fold(dfForSnapshot(snap))(readFiles(snap, _))
-    else dfWithRowIds(snap, rel.fold(snap.files)(filesIn(snap, _)),
-      RowTracking.MaterializedCol)
+  private def layoutRows(snap: Snapshot, files: Seq[AddFile]): DataFrame =
+    if (!RowTracking.enabled(snap.properties)) dfForFiles(snap, files)
+    else dfWithRowIds(snap, files, RowTracking.MaterializedCol)
 
   /** Read exactly these AddFiles (which need not be live in `snap` —
     * the change feed reads a REMOVED file with the deletion vector it
@@ -2015,12 +1897,8 @@ class VintageTable private (
     files.map(f => RemoveFile(f.path, now, dataChange = true))
   }
 
-  private[vintage] def removesFor(snap: Snapshot, rel: Set[String]): Seq[RemoveFile] = {
-    val now = System.currentTimeMillis()
-    // canonicalKey bridges representations: a cloned AddFile may carry
-    // file:/abs while the scan's _metadata path relativized to /abs
-    filesIn(snap, rel).map(f => RemoveFile(f.path, now, dataChange = true))
-  }
+  private[vintage] def removesFor(snap: Snapshot, rel: Set[String]): Seq[RemoveFile] =
+    removesForFiles(filesIn(snap, rel))
 
   private[vintage] def relativize(filePath: String): String = {
     // _metadata.file_path yields a URI like file:/tmp/table/p=1/part-x.parquet;
@@ -2466,12 +2344,6 @@ object VintageTable {
         Metadata(schema.json, properties, partCols)) ++ hwm ++ assigned)
     new VintageTable(spark, abs, None)
   }
-
-  /** Create if absent, else overwrite as a new version. */
-  def createOrOverwrite(spark: SparkSession, path: String, df: DataFrame): VintageTable =
-    if (isVintageTable(path)) {
-      val t = forPath(spark, path); t.overwrite(df); t
-    } else create(spark, path, df)
 
   /** Write `df`'s partitions as Parquet files into the table directory
     * and return their AddFile actions with per-column min/max/null-count

@@ -5,16 +5,15 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder}
-import org.apache.spark.sql.graftshim.VintageRelation
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.vintage.{Snapshot, VintageLog, VintageTable}
@@ -35,11 +34,12 @@ import graft.vintage.{Snapshot, VintageLog, VintageTable}
   * `VERSION AS OF` surface of SURVEY §2.1 S4); reads go through the
   * native DSv2 scan ([[VintageNativeScan]], stat- and partition-pruned,
   * columnar unless deletion vectors apply, which it subtracts per
-  * file); writes and deletes commit through
-  * [[VintageTable]]. MERGE INTO and UPDATE SQL are resolved by the
-  * injected [[VintageSqlExtension]] rule onto the fluent builders, and
-  * OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY by its delegating
-  * parser ([[VintageMaintenance]]).
+  * file, and serves the row-id metadata columns); writes and
+  * filter-translatable deletes commit through [[VintageTable]]. MERGE
+  * INTO, UPDATE and other DELETEs plan as Spark row-level operations
+  * ([[VintageRowLevelOperation]]) over that same scan, and OPTIMIZE /
+  * VACUUM / RESTORE / DESCRIBE HISTORY go through the
+  * [[VintageSqlExtension]] parser ([[VintageMaintenance]]).
   */
 class VintageCatalog extends TableCatalog with StagingTableCatalog {
   private var catalogName: String = _
@@ -454,32 +454,15 @@ class VintageSqlTable(
     * for it (`SELECT _vintage_row_id, * FROM vin.t`) and the third
     * row-id column the WriteDelta path threads through updates.
     */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
-    val base = Array[org.apache.spark.sql.connector.catalog.MetadataColumn](
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = VintageRowLevel.FileCol
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.StringType
+  override def metadataColumns(): Array[MetadataColumn] =
+    VintageRowLevel.rowIdCols(snapshot).map { case (n, t, c) =>
+      new MetadataColumn {
+        override def name(): String = n
+        override def dataType(): DataType = t
         override def isNullable: Boolean = false
-        override def comment(): String = "canonical data file key of the row"
-      },
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = VintageRowLevel.PosCol
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String = "physical row position inside its file"
-      })
-    if (!graft.vintage.RowTracking.enabled(snapshot.properties)) base
-    else base :+ (new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = VintageRowLevel.TrackIdCol
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType
-      override def isNullable: Boolean = false
-      override def comment(): String =
-        "stable row-tracking id (-1 for rows written before enablement)"
-    })
-  }
+        override def comment(): String = c
+      }: MetadataColumn
+    }.toArray
 
   /** Native row-level DELETE/UPDATE/MERGE (delta-based — see
     * [[VintageRowLevelOperation]]).
@@ -488,7 +471,7 @@ class VintageSqlTable(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(!timeTravel, "cannot modify a time-travel snapshot")
-    () => new VintageRowLevelOperation(tablePath, snapshot, info.command())
+    () => new VintageRowLevelOperation(this, info.command())
   }
   override def partitioning(): Array[Transform] =
     snapshot.partitionColumns.map(c =>
@@ -514,7 +497,10 @@ class VintageSqlTable(
       private var aggResult: Option[VintageAggregates.Result] = None
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters.filter(f => Filters.toColumn(f).isDefined)
+        // row-id columns are not in the file stats, and the materialized
+        // `_vintage_row_id` is not the whole id: never pushed
+        pushed = filters.filter(f => Filters.toColumn(f).isDefined &&
+          !f.references.exists(VintageRowLevel.isRowIdCol))
         filters // all filters stay as residual; parquet re-applies pushed
       }
       override def pushedFilters(): Array[Filter] = pushed
@@ -534,18 +520,11 @@ class VintageSqlTable(
 
       override def build(): Scan = aggResult match {
         case Some(r) => new VintageMetadataScan(r, ident)
+        // every read, row-level targets and row-id columns included:
+        // the native scan subtracts deletion vectors per file from its
+        // stats-pruned list
         case None =>
-          val wantsRowId = required.fieldNames.exists(n =>
-            n == VintageRowLevel.FileCol || n == VintageRowLevel.PosCol ||
-            n == VintageRowLevel.TrackIdCol)
-          // row-id metadata columns ride the same V1 frame the
-          // row-level operations scan through
-          if (wantsRowId)
-            new VintageRowLevel.RowIdV1Scan(tablePath, snapshot, required, pushed)
-          // every other read, deletion vectors included: the native
-          // scan subtracts them per file from its stats-pruned list
-          else
-            new VintageNativeScan(spark, tablePath, snapshot, required, pushed)
+          new VintageNativeScan(spark, tablePath, snapshot, required, pushed)
       }
     }
 

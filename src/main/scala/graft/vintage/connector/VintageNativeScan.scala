@@ -6,7 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Expression, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
@@ -15,7 +15,8 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionRea
 import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.parquet.hadoop.ParquetInputFormat
 
@@ -39,28 +40,55 @@ import graft.vintage.{AddFile, ColumnMapping, DeletedRows, DeletionVectors, File
   * that reads each file with its parquet row index and drops the
   * file's deleted positions — no join, no extra job, current and
   * time-travel snapshots alike.
+  *
+  * The scan also serves the row-id metadata columns every SQL row-level
+  * plan (MERGE INTO, UPDATE, non-translatable DELETE) reads its target
+  * through, and explicit `SELECT _vintage_file, …` reads:
+  *  - `_vintage_file`, the canonical file key, is a per-file constant
+  *    riding the partition values of each [[PartitionedFile]];
+  *  - `_vintage_pos` is the parquet row index the DV filter reads;
+  *  - `_vintage_row_id` (row-tracked tables) is the file's materialized
+  *    id, else its `baseRowId` (a second per-file constant) plus the
+  *    row index, else `-1` — computed by the row reader.
+  * Without deletion vectors or row ids, Spark's reader runs unwrapped,
+  * so file-key and position reads stay columnar.
   */
 class VintageNativeScan(
     spark: SparkSession, tablePath: String, snapshot: Snapshot,
     requiredSchema: StructType, pushedFilters: Array[Filter])
     extends Scan with Batch with SupportsReportStatistics {
 
+  import VintageRowLevel.{FileCol, PosCol, TrackIdCol}
+
   private val partCols = snapshot.partitionColumns
   private def isPartCol(name: String): Boolean =
     partCols.exists(_.equalsIgnoreCase(name))
 
+  private def wants(name: String): Boolean = requiredSchema.fieldNames.contains(name)
+  private val wantFile = wants(FileCol)
+  private val wantPos = wants(PosCol)
+  private val wantRowId = wants(TrackIdCol)
+
   /** Full non-partition schema of the data files. */
   private val dataSchema =
     StructType(snapshot.schema.filterNot(f => isPartCol(f.name)))
-  private val readDataSchema =
-    StructType(requiredSchema.filterNot(f => isPartCol(f.name)))
+  private val readDataSchema = StructType(requiredSchema.filterNot(f =>
+    isPartCol(f.name) || VintageRowLevel.isRowIdCol(f.name)))
   private val readPartitionSchema =
     StructType(requiredSchema.filter(f => isPartCol(f.name)))
 
-  // the reader emits data columns then partition columns; Spark's scan
-  // relation projects back to the order the query asked for
-  override def readSchema(): StructType =
-    StructType(readDataSchema ++ readPartitionSchema)
+  private def when[T](cond: Boolean)(x: => T): Seq[T] = if (cond) Seq(x) else Nil
+
+  // the reader emits data columns, the row position, partition columns,
+  // then the file key and row id; Spark's scan relation projects back
+  // to the order the query asked for. Row ids are non-nullable, as
+  // Spark's row-level rewrites require.
+  override def readSchema(): StructType = StructType(
+    readDataSchema ++
+    when(wantPos)(StructField(PosCol, LongType, nullable = false)) ++
+    readPartitionSchema ++
+    when(wantFile)(StructField(FileCol, StringType, nullable = false)) ++
+    when(wantRowId)(StructField(TrackIdCol, LongType, nullable = false)))
 
   override def toBatch: Batch = this
 
@@ -100,11 +128,16 @@ class VintageNativeScan(
   override def planInputPartitions(): Array[InputPartition] = {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val splits = pruned.flatMap { f =>
+      val abs = f.absolutePath(tablePath)
+      // per-file constants ride the partition values: the file key as
+      // the row-level commit resolves it, and the row-id base
       val pv = InternalRow.fromSeq(readPartitionSchema.map { field =>
         f.partitionValues.get(field.name)
           .map(PartitionPaths.castValue(_, field.dataType)).orNull
-      })
-      val path = SparkPath.fromPathString(f.absolutePath(tablePath))
+      } ++
+        when(wantFile)(UTF8String.fromString(DeletionVectors.fileKey(abs))) ++
+        when(wantRowId)(f.baseRowId.getOrElse(null)))
+      val path = SparkPath.fromPathString(abs)
       (0L until math.max(f.size, 1L) by maxSplit).map { off =>
         PartitionedFile(pv, path, off, math.min(maxSplit, f.size - off),
           Array.empty, f.modificationTime, f.size)
@@ -136,13 +169,18 @@ class VintageNativeScan(
     val conf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
     val physDataSchema = toPhys(dataSchema)
-    // with deletion vectors every file is read with its row index as a
-    // trailing data column — NULLABLE, since the vectorized reader
-    // rejects a required column that is missing from the file
-    val physReadDataSchema =
-      if (dvFiles.isEmpty) toPhys(readDataSchema)
-      else toPhys(readDataSchema).add(StructField(
-        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
+    // trailing data columns, both NULLABLE since the vectorized reader
+    // rejects a required column missing from the file: the materialized
+    // row id (absent from files no layout rewrite produced), then the
+    // row index every DV, position or row-id read needs
+    val withIndex = wantPos || wantRowId || dvFiles.nonEmpty
+    val physReadDataSchema = StructType(toPhys(readDataSchema) ++
+      when(wantRowId)(StructField(TrackIdCol, LongType, nullable = true)) ++
+      when(withIndex)(StructField(
+        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true)))
+    val partitionSchema = StructType(readPartitionSchema ++
+      when(wantFile)(StructField(FileCol, StringType, nullable = false)) ++
+      when(wantRowId)(StructField("base_row_id", LongType, nullable = true)))
     val readDataSchemaJson = physReadDataSchema.json
     hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
@@ -168,42 +206,57 @@ class VintageNativeScan(
       confBc,
       physDataSchema,
       physReadDataSchema,
-      readPartitionSchema,
+      partitionSchema,
       dataFilters,
       None,
       new ParquetOptions(Map.empty[String, String], conf))
-    if (dvFiles.isEmpty) parquet
-    else {
-      // keyed like the PartitionedFiles planInputPartitions builds
-      def key(f: AddFile): String =
-        SparkPath.fromPathString(f.absolutePath(tablePath)).urlEncoded
-      // inline vectors ride in the factory; sidecars are only named
-      // here and load in the task that reads the file
-      val (sidecar, inline) = dvFiles.partition(_.dvRef.isDefined)
-      new DvFilteringReaderFactory(parquet,
-        inline.map(f => key(f) -> DeletedRows.fromPositions(f.dv)).toMap,
-        sidecar.map(f => key(f) -> (
-          AddFile.resolve(tablePath, f.dvRef.get.path),
-          DeletionVectors.fileKey(f.absolutePath(tablePath)))).toMap,
-        confBc,
-        rowIndexOrdinal = physReadDataSchema.length - 1,
-        rowTypes = (physReadDataSchema ++ readPartitionSchema).map(_.dataType))
-    }
+    // Spark's reader already emits readSchema's layout
+    if (dvFiles.isEmpty && !wantRowId) return parquet
+    // row layout of Spark's reader: data columns, [materialized id],
+    // row index, partition columns, [file key], [base row id]
+    val types = (physReadDataSchema ++ partitionSchema).map(_.dataType)
+    def at(i: Int): Expression = BoundReference(i, types(i), nullable = true)
+    val nData = readDataSchema.length
+    val index = at(physReadDataSchema.length - 1)
+    val parts = physReadDataSchema.length until
+      physReadDataSchema.length + readPartitionSchema.length
+    val output = (0 until nData).map(at) ++
+      when(wantPos)(index) ++
+      parts.map(at) ++
+      when(wantFile)(at(parts.end)) ++
+      when(wantRowId)(Coalesce(Seq(
+        at(nData), Add(at(types.length - 1), index), Literal(-1L))))
+    // keyed like the PartitionedFiles planInputPartitions builds
+    def key(f: AddFile): String =
+      SparkPath.fromPathString(f.absolutePath(tablePath)).urlEncoded
+    // inline vectors ride in the factory; sidecars are only named
+    // here and load in the task that reads the file
+    val (sidecar, inline) = dvFiles.partition(_.dvRef.isDefined)
+    new DvFilteringReaderFactory(parquet,
+      inline.map(f => key(f) -> DeletedRows.fromPositions(f.dv)).toMap,
+      sidecar.map(f => key(f) -> (
+        AddFile.resolve(tablePath, f.dvRef.get.path),
+        DeletionVectors.fileKey(f.absolutePath(tablePath)))).toMap,
+      confBc,
+      rowIndexOrdinal = physReadDataSchema.length - 1,
+      output)
   }
 }
 
-/** Parquet reads of a scan whose files carry deletion vectors. Each
-  * file's rows arrive from Spark's parquet reader with the row index at
+/** The one wrapper around Spark's parquet reads, for scans whose files
+  * carry deletion vectors or that serve row ids. Each file's rows
+  * arrive from Spark's parquet reader with the row index at
   * `rowIndexOrdinal` (file-global, so a file split over several tasks
   * needs no offset); a row survives when its index is not among the
-  * file's deleted positions, and the index is projected away.
+  * file's deleted positions, and `output` shapes it into the scan's
+  * read schema (dropping the index, computing the row id).
   *
   * `inline` maps a file (its URL-encoded path) to its deleted rows;
   * `sidecars` maps a file to (sidecar dir, canonical file key), read
   * by the task through [[DeletionVectors.readSidecar]] — never
   * collected on the driver. Rows only: one scan cannot mix row and
-  * columnar partitions, so DV scans give up columnar batches while
-  * DV-free scans keep them.
+  * columnar partitions, so wrapped scans give up columnar batches
+  * while the others keep them.
   */
 private[connector] final class DvFilteringReaderFactory(
     parquet: ParquetPartitionReaderFactory,
@@ -211,7 +264,7 @@ private[connector] final class DvFilteringReaderFactory(
     sidecars: Map[String, (String, String)],
     conf: Broadcast[SerializableConfiguration],
     rowIndexOrdinal: Int,
-    rowTypes: Seq[DataType]) extends FilePartitionReaderFactory {
+    output: Seq[Expression]) extends FilePartitionReaderFactory {
 
   override def options: FileSourceOptions = parquet.options
 
@@ -224,9 +277,7 @@ private[connector] final class DvFilteringReaderFactory(
         DeletionVectors.readSidecar(dir, fileKey, conf.value.value)
       case None => DeletedRows.empty
     })
-    val dropIndex = UnsafeProjection.create(rowTypes.indices
-      .filter(_ != rowIndexOrdinal)
-      .map(i => BoundReference(i, rowTypes(i), nullable = true)))
+    val shape = UnsafeProjection.create(output)
     val rows = parquet.buildReader(file)
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
@@ -234,7 +285,7 @@ private[connector] final class DvFilteringReaderFactory(
         while (rows.next()) {
           val row = rows.get()
           if (!deleted.contains(row.getLong(rowIndexOrdinal))) {
-            current = dropIndex(row)
+            current = shape(row)
             return true
           }
         }

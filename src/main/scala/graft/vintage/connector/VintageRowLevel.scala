@@ -8,19 +8,17 @@ import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SparkSession, SQLContext}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.vintage.{AddFile, Snapshot, VintageTable}
+import graft.vintage.{RowTracking, Snapshot, VintageTable}
 
 /** Native Catalyst row-level operations (`SupportsRowLevelOperations` +
   * `SupportsDelta`) for SQL `DELETE` / `UPDATE` / `MERGE INTO` on
@@ -30,10 +28,12 @@ import graft.vintage.{AddFile, Snapshot, VintageTable}
   *
   *  - Spark's analyzer rewrites (`RewriteUpdateTable`,
   *    `RewriteMergeIntoTable`, `RewriteDeleteFromTable`) plan the
-  *    operation over this table's scan extended with the position
-  *    row-id (`_vintage_file`, `_vintage_pos` — the canonical file key
-  *    and physical row index the deletion-vector machinery is built
-  *    on);
+  *    operation over the table's own [[VintageNativeScan]], which
+  *    serves the position row-id (`_vintage_file`, `_vintage_pos` —
+  *    the canonical file key and physical row index the
+  *    deletion-vector machinery is built on) next to the data and
+  *    drops deleted rows in its reader: the target scan is the same
+  *    single scan every SQL read uses, with no join below the write;
   *  - the delta write receives per-row verdicts (DELETE id / INSERT
   *    row / UPDATE id→row) on EXECUTORS: deleted positions stream into
   *    per-task parquet files (never the driver), inserted rows stream
@@ -68,109 +68,48 @@ object VintageRowLevel {
     * writer's update verdict, closing the former SQL-path divergence:
     * SQL UPDATE/MERGE now preserves ids exactly like fluent rewrites.
     */
-  val TrackIdCol = graft.vintage.RowTracking.MaterializedCol
+  val TrackIdCol = RowTracking.MaterializedCol
 
-  /** The row-id frame: table columns plus canonical file key and
-    * physical row position, deletion-vectors applied — both the
-    * row-level scan and explicit metadata-column selects read it.
-    * Pushed filters (the DELETE/UPDATE condition's translatable
-    * conjuncts) prune the FILE LIST through log-stats skipping before
-    * any scan plan exists: a partition-scoped UPDATE of a 100 TB table
-    * reads the candidate files, not the table. Pruning by a conjunct
-    * SUBSET is sound (a file with no rows matching one conjunct has no
-    * rows matching the whole condition), and the rows of unscanned
-    * files are simply not modified — exactly the row-level contract.
-    */
-  private[connector] def rowIdFrame(
-      spark: SparkSession, tablePath: String, snap: Snapshot,
-      filters: Seq[Filter], columns: Seq[String]): RDD[Row] = {
-    val t = VintageTable.forPath(spark, tablePath)
-    val tracked = columns.contains(TrackIdCol)
-    def frame(files: Seq[AddFile]) =
-      if (tracked) t.dfForFilesWithRowIdTracked(snap, files, FileCol, PosCol,
-        TrackIdCol)
-      else t.dfForFilesWithRowId(snap, files, FileCol, PosCol)
-    val df = Filters.toColumnAll(filters) match {
-      case Some(cond) => frame(t.candidateFiles(snap, cond)).filter(cond)
-      case None => frame(snap.files)
-    }
-    df.select(columns.map(org.apache.spark.sql.functions.col): _*).rdd
-  }
+  def isRowIdCol(name: String): Boolean =
+    name == FileCol || name == PosCol || name == TrackIdCol
 
-  /** V1 scan producing the row-id frame: the metadata columns and the
-    * deletion-vector anti-join of [[graft.vintage.DeletionVectors.applyTo]]
-    * are DataFrame plans, bridged through Spark's V1 seam.
+  /** The row-id columns of `snap` with their type and comment, in the
+    * order the row-level operation declares them and the delta writer
+    * reads them: file key and position, plus the tracking id on
+    * row-tracked tables.
     */
-  final class RowIdV1Scan(tablePath: String, snap: Snapshot,
-      required: StructType, pushed: Array[Filter]) extends V1Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"VintageRowIdScan $tablePath v${snap.version}"
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      val rel: BaseRelation with TableScan = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] =
-          rowIdFrame(context.sparkSession, tablePath, snap, pushed.toSeq,
-            required.fieldNames.toSeq)
-      }
-      rel.asInstanceOf[T]
-    }
-  }
+  def rowIdCols(snap: Snapshot): Seq[(String, DataType, String)] =
+    Seq((FileCol, StringType, "canonical data file key of the row"),
+      (PosCol, LongType, "physical row position inside its file")) ++
+    (if (!RowTracking.enabled(snap.properties)) Nil
+     else Seq((TrackIdCol, LongType,
+       "stable row-tracking id (-1 for rows written before enablement)")))
 }
 
 /** One row-level operation instance: shared between the scan side and
   * the write side of a single DELETE/UPDATE/MERGE statement.
   */
-class VintageRowLevelOperation(
-    tablePath: String, snap: Snapshot, cmd: Command)
+class VintageRowLevelOperation(table: VintageSqlTable, cmd: Command)
     extends RowLevelOperation with SupportsDelta {
+
+  private val tablePath = table.tablePath
+  private val snap = table.snapshot
 
   override def command(): Command = cmd
 
   /** Row-tracked tables carry the tracking id as a third row-id column
     * so the delta writer can re-materialize it into updated rows.
     */
-  private val tracked =
-    graft.vintage.RowTracking.enabled(snap.properties)
+  private val tracked = RowTracking.enabled(snap.properties)
 
-  override def rowId(): Array[NamedReference] = {
-    val base = Array(
-      Expressions.column(VintageRowLevel.FileCol),
-      Expressions.column(VintageRowLevel.PosCol))
-    if (tracked) base :+ Expressions.column(VintageRowLevel.TrackIdCol)
-    else base
-  }
+  override def rowId(): Array[NamedReference] =
+    VintageRowLevel.rowIdCols(snap).map(c => Expressions.column(c._1)).toArray
 
+  /** The target scan is the table's own: [[VintageNativeScan]] serves
+    * the row-id columns next to the data, deletion vectors dropped.
+    */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownFilters
-        with SupportsPushDownRequiredColumns {
-      private var pushed: Array[Filter] = Array.empty
-      private var required: StructType = StructType(
-        snap.schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField(
-            VintageRowLevel.FileCol, StringType, nullable = false),
-          org.apache.spark.sql.types.StructField(
-            VintageRowLevel.PosCol, LongType, nullable = false)) ++
-          (if (tracked) Seq(org.apache.spark.sql.types.StructField(
-            VintageRowLevel.TrackIdCol, LongType, nullable = false))
-           else Nil))
-
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        // pruning only — every filter stays residual and Spark
-        // re-applies it above the scan (same contract as the catalog's
-        // read scan builder)
-        pushed = filters.filter(f => Filters.toColumn(f).isDefined)
-        filters
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        if (requiredSchema.nonEmpty) required = requiredSchema
-
-      override def build(): Scan =
-        new VintageRowLevel.RowIdV1Scan(tablePath, snap, required, pushed)
-    }
+    table.newScanBuilder(options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -277,21 +216,14 @@ class VintageDeltaBatchWrite(
     val spark = SparkSession.active
     try VintageTable.forPath(spark, tablePath)
       .commitDeltaRowLevel(scanVersion, op, insertAdds, posFiles, counts)
-    finally cleanupPositionFiles(posFiles)
+    finally VintageDeltaWriter.deletePositionFiles(posFiles, conf)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: VintageDeltaCommitMessage => m }
     insertBatch.abort(msgs.map(_.inner).toArray)
-    cleanupPositionFiles(msgs.flatMap(_.positionFile))
+    VintageDeltaWriter.deletePositionFiles(msgs.flatMap(_.positionFile), conf)
   }
-
-  private def cleanupPositionFiles(paths: Seq[String]): Unit =
-    paths.foreach { p =>
-      val hp = new HPath(p)
-      try hp.getFileSystem(conf.value).delete(hp, false)
-      catch { case _: java.io.IOException => () }
-    }
 }
 
 class VintageDeltaWriterFactory(
@@ -386,11 +318,7 @@ class VintageDeltaWriter(
   override def abort(): Unit = {
     try if (posWriter != null) posWriter.close()
     catch { case _: Exception => () }
-    posPath.foreach { p =>
-      val hp = new HPath(p)
-      try hp.getFileSystem(conf.value).delete(hp, false)
-      catch { case _: java.io.IOException => () }
-    }
+    VintageDeltaWriter.deletePositionFiles(posPath.toSeq, conf)
     inner.abort()
   }
 
@@ -403,4 +331,12 @@ private object VintageDeltaWriter {
       |  required binary file_key (UTF8);
       |  required int64 pos;
       |}""".stripMargin)
+
+  /** Best-effort removal of per-task position files. */
+  def deletePositionFiles(paths: Seq[String], conf: SerializableConfiguration): Unit =
+    paths.foreach { p =>
+      val hp = new HPath(p)
+      try hp.getFileSystem(conf.value).delete(hp, false)
+      catch { case _: java.io.IOException => () }
+    }
 }

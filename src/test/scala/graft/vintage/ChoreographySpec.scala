@@ -8,14 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.sdmx.Sdmx
 
-/** Replays the reference's full 12-step choreography
-  * (/root/reference/README.md, golden counts tabulated in SURVEY.md §5)
-  * against the shipped submission CSVs, asserting every expected count,
+/** Replays the reference's full 12-step choreography (golden counts
+  * tabulated in SURVEY.md §5) against the synthetic submission fixture
+  * in `src/test/resources/sdmx` (written by
+  * `scripts/gen_sdmx_fixture.py`), asserting every expected count,
   * value and history row.
   */
 class ChoreographySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val in = "/root/reference/in"
+  private val in = getClass.getResource("/sdmx").getPath
   private lazy val dir = Files.createTempDirectory("vintage-choreo").toString + "/exr"
 
   private def sub(i: Int, evolved: Boolean = false) =

@@ -18,7 +18,7 @@ import graft.sdmx.Sdmx
 class ConnectorSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
-  private val in = "/root/reference/in"
+  private val in = getClass.getResource("/sdmx").getPath
 
   private def sub(i: Int, evolved: Boolean = false) =
     Sdmx.readSubmission(spark, s"$in/data.$i.csv", evolved)

@@ -534,9 +534,9 @@ class DeletionVectorSpec extends AnyFunSuite {
   private case class Observed(jobs: Long, recordsRead: Long)
 
   /** Spark jobs started and records read across all tasks while `body`
-    * runs — the observables for file-level pruning through the V1
-    * DV/row-level frames, whose inner parquet scan is invisible to the
-    * OUTER executed plan, and for planning-time jobs.
+    * runs — the observables for file-level pruning through the V1 DV
+    * frame, whose inner parquet scan is invisible to the OUTER executed
+    * plan, through row-level DML, and for planning-time jobs.
     */
   private def observe(body: => Unit): Observed = {
     val jobs = new java.util.concurrent.atomic.AtomicLong()
@@ -795,6 +795,76 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(seen.recordsRead <= 100, "the lookup must read one pruned file")
       assert(spark.sql("SELECT count(*) FROM dvlook.t WHERE id = 250")
         .head().getLong(0) == 0)
+    }
+  }
+
+  /** Per file of `snap`, the live positions `0 until numRecords` minus
+    * the file's deletion vector as [[DeletionVectors.dvLookup]] reads
+    * it from the log and the sidecars — no scan of the data files.
+    */
+  private def livePositions(t: VintageTable, snap: Snapshot): Set[(String, Long)] = {
+    val deleted = DeletionVectors.dvLookup(spark, t.path, snap.files, "f", "p")
+      .as[(String, Long)].collect().toSet
+    snap.files.flatMap { f =>
+      val key = DeletionVectors.fileKey(f.absolutePath(t.path))
+      (0L until f.numRecords.get).map(key -> _)
+    }.filterNot(deleted).toSet
+  }
+
+  test("SQL row-level DML on DV tables reads row ids in the native scan, no join") {
+    val inline = newDir("rowid-inline")
+    val it = VintageTable.create(spark, inline,
+      (1L to 60L).map(i => (i, s"n$i")).toDF("id", "name").repartition(2),
+      properties = DvProps)
+    it.delete(col("id") % 9 === 0)
+    val sidecar = newDir("rowid-sidecar")
+    val st = VintageTable.create(spark, sidecar,
+      (1L to 200L).map(i => (i, s"n$i")).toDF("id", "name").repartition(2),
+      properties = SidecarProps)
+    st.delete(col("id").between(60, 90))
+    assert(st.snapshot.files.exists(_.dvRef.isDefined))
+    val part = newDir("rowid-part")
+    val pt = VintageTable.create(spark, part,
+      (1L to 60L).map(i => (i, i % 3, s"n$i")).toDF("id", "p", "name"),
+      properties = DvProps, partitionBy = Seq("p"))
+    pt.delete(col("p") === 1 && col("id") <= 10)
+    val mapped = newDir("rowid-colmap")
+    val mt = VintageTable.create(spark, mapped,
+      (1L to 60L).map(i => (i, s"n$i", i * 1.5)).toDF("id", "name", "amount")
+        .repartition(2),
+      properties = DvProps + (ColumnMapping.ModeProp -> "name"))
+    mt.delete(col("id") % 7 === 0)
+    mt.renameColumn("amount", "price")
+    Seq(it -> "rlinline", st -> "rlsidecar", pt -> "rlpart", mt -> "rlmap")
+        .foreach { case (t, cat) =>
+      val dir = t.path
+      withCatalog(cat, warehouseOf(dir)) {
+        def assertRowIds(): Unit = {
+          val ids = spark.sql(s"SELECT _vintage_file, _vintage_pos FROM $cat.t")
+          assert(ids.as[(String, Long)].collect().toSet ==
+            livePositions(t, t.snapshot), s"$cat row ids")
+        }
+        assertRowIds()
+        val want = rowsOf(t.toDF.filter(col("id") % 11 =!= 0))
+        val dml = Seq(
+          s"""MERGE INTO $cat.t x USING (SELECT * FROM $cat.t WHERE id <= 12) s
+             |ON x.id = s.id WHEN MATCHED THEN UPDATE SET *""".stripMargin,
+          s"UPDATE $cat.t SET id = id WHERE id % 3 = 1",
+          s"DELETE FROM $cat.t WHERE id % 11 = 0")
+        dml.foreach { stmt =>
+          val plan = spark.sql(s"EXPLAIN $stmt").collect()(0).getString(0)
+          assert(plan.contains("WriteDelta") && plan.contains("VintageNativeScan"),
+            s"$cat: $stmt\n$plan")
+          // MERGE joins its source (itself scanned natively); nothing else
+          val joins = "\\w*Join\\b".r.findAllIn(plan).size
+          val ownJoins = if (stmt.startsWith("MERGE")) 1 else 0
+          assert(joins == ownJoins, s"$cat: $stmt\n$plan")
+          assert(!plan.contains("ExistingRDD"), s"$cat: $stmt\n$plan")
+          spark.sql(stmt)
+        }
+        assert(rowsOf(spark.sql(s"SELECT * FROM $cat.t")) == want, cat)
+        assertRowIds()
+      }
     }
   }
 

@@ -135,6 +135,52 @@ class RowTrackingSpec extends AnyFunSuite {
     spark.sql("DROP TABLE rtcat.t")
   }
 
+  test("SQL _vintage_row_id equals toDFWithRowIds, -1 for rows without an id") {
+    val dir = newDir()
+    // rows written before tracking was enabled have no id
+    val t = VintageTable.create(spark, dir,
+      (1L to 4L).map(k => (k, s"a$k")).toDF("k", "v").coalesce(1),
+      Map(DeletionVectors.EnabledProp -> "true"))
+    t.setProperties(Map(RowTracking.EnabledProp -> "true"))
+    t.append((5L to 8L).map(k => (k, s"b$k")).toDF("k", "v").coalesce(1))
+    t.append((9L to 12L).map(k => (k, s"c$k")).toDF("k", "v").coalesce(1))
+    t.delete(col("k") === 10L)
+    // only the DV file rewrites: its ids materialize, the others stay
+    // base + row index
+    assert(t.optimize(targetFileBytes = 1024L * 1024, minFileBytes = 0L) == 1L)
+    t.delete(col("k") === 2L || col("k") === 6L)
+    val want = t.toDFWithRowIds.select("k", RowTracking.RowIdCol)
+      .as[(Long, Option[Long])].collect()
+      .map { case (k, id) => k -> id.getOrElse(-1L) }.toMap
+    assert(want.keySet == Set(1L, 3L, 4L, 5L, 7L, 8L, 9L, 11L, 12L))
+    assert(want.filter(_._2 == -1L).keySet == Set(1L, 3L, 4L))
+    val wh = new java.io.File(dir).getParent
+    spark.conf.set("spark.sql.catalog.rtids",
+      "graft.vintage.connector.VintageCatalog")
+    spark.conf.set("spark.sql.catalog.rtids.warehouse", wh)
+    try {
+      val got = spark.sql("SELECT k, _vintage_row_id FROM rtids.t")
+        .as[(Long, Long)].collect().toMap
+      assert(got == want)
+      // one merge file holds an updated row (materialized id) and an
+      // inserted one (null there, base + index): a row-id predicate
+      // must find both, so it never reaches the parquet reader
+      t.as("m").merge(Seq((5L, "u5"), (13L, "d13")).toDF("k", "v")
+          .coalesce(1).as("s"), "m.k = s.k")
+        .whenMatched().updateAll().whenNotMatched().insertAll().execute()
+      val merged = t.toDFWithRowIds.select("k", RowTracking.RowIdCol)
+        .as[(Long, Option[Long])].collect().toMap
+      Seq(5L, 13L).foreach { k =>
+        assert(spark.sql(
+          s"SELECT k FROM rtids.t WHERE _vintage_row_id = ${merged(k).get}")
+          .as[Long].collect().toSeq == Seq(k), s"row-id lookup of $k")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.rtids")
+      spark.conf.unset("spark.sql.catalog.rtids.warehouse")
+    }
+  }
+
   test("checkpoint and restore preserve the mark and the ids") {
     val dir = newDir()
     val t = VintageTable.create(spark,

@@ -112,6 +112,12 @@ class SqlCatalogSpec extends AnyFunSuite {
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       .collect()(0).getString(0)
     assert(mrg.contains("WriteDelta"), s"expected a WriteDelta plan node:\n$mrg")
+    // the target is read by the native scan, not a V1 row-id frame
+    Seq(upd, mrg).foreach { plan =>
+      assert(plan.contains("VintageNativeScan"), s"expected the native scan:\n$plan")
+      assert(!plan.contains("VintageRowIdScan") && !plan.contains("ExistingRDD"),
+        s"no V1 row-id scan expected:\n$plan")
+    }
     // the position row-id rides hidden metadata columns
     val ids = spark.sql("SELECT _vintage_file, _vintage_pos, k FROM vin.rl")
       .collect()
